@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dbt_meshify_spark.operators.graph_rank import _fixpoint
 from dbt_meshify_spark.operators.util import spread
 
 # Mersenne prime 2^31-1 as the universal-hash modulus. The modulus must be
@@ -914,13 +915,8 @@ def _kept_gram_index(
     text_col: str,
     n: int,
     max_gram_df: int | None,
-    _pin: bool = True,
 ) -> tuple[DataFrame, DataFrame]:
     """Stage the (id, gram) inverted index ONCE for the n-gram pair family.
-
-    ``_pin=False`` skips the localCheckpoint pins (test hook ONLY: the pins
-    truncate the lineage, so plan guards need the unpinned tree to see the
-    cap's join shape).
 
     Returns ``(kept, counts)``: the surviving-gram index (pinned with
     ``localCheckpoint``) and the per-doc kept-gram counts ``(id,
@@ -966,20 +962,14 @@ def _kept_gram_index(
         .select("id", F.xxhash64("__g").alias("gram"))
     )
     if max_gram_df is not None:
-        if _pin:
-            grams = grams.localCheckpoint(eager=False)
+        grams = grams.localCheckpoint(eager=False)
         drop = grams.groupBy("gram").agg(F.count("*").alias("gdf")).filter(
             F.col("gdf") > max_gram_df
         )
-        kept = grams.join(
+        grams = grams.join(
             F.broadcast(drop.select("gram")), "gram", "left_anti"
         )
-        if _pin:
-            kept = kept.localCheckpoint(eager=False)
-    elif _pin:
-        kept = grams.localCheckpoint(eager=False)
-    else:
-        kept = grams
+    kept = grams.localCheckpoint(eager=False)
     counts = kept.groupBy("id").agg(F.count("*").alias("n_grams"))
     return kept, counts
 
@@ -1153,7 +1143,6 @@ def winnow_overlap_pairs(
     window: int = 4,
     min_shared: int = 2,
     max_print_df: int | None = 10_000,
-    _pin: bool = True,
 ) -> DataFrame:
     """Partial-overlap candidate pairs over winnowing fingerprints: docs
     sharing >= ``min_shared`` selected prints, scored by
@@ -1177,9 +1166,7 @@ def winnow_overlap_pairs(
     """
     prints = winnow_fingerprints(df, id_col, text_col, k=k, window=window).select(
         F.col(id_col).alias("id"), F.col("print")
-    )
-    if _pin:  # _pin=False: test hook — plan guards need the unpinned tree
-        prints = prints.localCheckpoint(eager=False)
+    ).localCheckpoint(eager=False)
     if max_print_df is not None:
         # broadcast anti-join against the DROP list (r14, the
         # _kept_gram_index discipline, guide §3.2): prints with
@@ -1191,9 +1178,7 @@ def winnow_overlap_pairs(
         )
         prints = prints.join(
             F.broadcast(drop.select("print")), "print", "left_anti"
-        )
-        if _pin:
-            prints = prints.localCheckpoint(eager=False)
+        ).localCheckpoint(eager=False)
     counts = prints.groupBy("id").agg(F.count("*").alias("n_prints"))
     p1 = prints.select(F.col("id").alias("id_a"), "print")
     p2 = prints.select(
@@ -1900,16 +1885,10 @@ def _cc_star(
     Round = large-star (every node links its strictly-larger neighbors to
     its neighborhood min) + small-star (every node folds its smaller
     neighbors onto their min). Edges stay oriented big->small; convergence
-    is a stable edge set, detected by a constant-size (count, hash-sum)
-    signature over the checkpointed edges — no old-vs-new subtract join.
-    At the fixpoint every non-root points directly at its component min.
+    is a stable edge set, detected by graph_rank's :func:`_fixpoint` loop
+    (constant-size signature, no old-vs-new subtract join). At the
+    fixpoint every non-root points directly at its component min.
     """
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
     e = (
         edges.filter(F.col("src") != F.col("dst"))
         .select(
@@ -1917,22 +1896,10 @@ def _cc_star(
             F.least("src", "dst").alias("v"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
 
-    def _sig(frame: DataFrame) -> tuple:
-        # order-insensitive digest over the edge set; the hash sum runs in
-        # unbounded decimal because a BIGINT sum of full-range xxhash64
-        # values overflows long, which ANSI mode (Spark 4 default) turns
-        # into ARITHMETIC_OVERFLOW instead of wrapping
-        row = frame.agg(
-            F.count("*").alias("n"),
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    sig = _sig(e)
-    for rnd in range(max_iter):
+    def step(e: DataFrame) -> DataFrame:
         und = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
         # large-star: m(u) = min(N(u) ∪ {u}); emit (v, m) for v > u
         lmin = und.groupBy("u").agg(F.min("v").alias("nmin"))
@@ -1947,30 +1914,27 @@ def _cc_star(
         # small-star over big->small edges: fold N(u) ∪ {u} onto min(N(u))
         smin = large.groupBy("u").agg(F.min("v").alias("m"))
         with_min = large.join(smin, "u")
-        small = (
+        return (
             with_min.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .union(with_min.select("u", F.col("m").alias("v")))
             .filter(F.col("u") != F.col("v"))
             .distinct()
-            .localCheckpoint(eager=True)
         )
-        e = small
-        new_sig = _sig(e)
-        if new_sig == sig:
-            if stats is not None:
-                stats["rounds"] = rnd + 1
-            comp = e.select(
-                F.col("u").alias("id"), F.col("v").alias("component")
-            )
-            return (
-                nodes.join(comp, "id", "left")
-                .select(
-                    "id",
-                    F.coalesce("component", "id").alias("component"),
-                )
-            )
-        sig = new_sig
-    raise RuntimeError(f"star CC did not converge in {max_iter} rounds")
+
+    loop = _fixpoint(e, step, max_iter, track=True)
+    if not loop.converged:
+        raise RuntimeError(f"star CC did not converge in {max_iter} rounds")
+    if stats is not None:
+        stats["rounds"] = loop.rounds
+    nodes = (
+        edges.select(F.col("src").alias("id"))
+        .union(edges.select(F.col("dst").alias("id")))
+        .distinct()
+    )
+    comp = loop.frame.select(F.col("u").alias("id"), F.col("v").alias("component"))
+    return nodes.join(comp, "id", "left").select(
+        "id", F.coalesce("component", "id").alias("component")
+    )
 
 
 # auto tier: propagate rounds to try before declaring the graph a whale
@@ -1996,11 +1960,11 @@ def connected_components(
     label among itself and its neighbors; converges in O(graph diameter)
     rounds. Near-dup graphs are piles of small cliques (diameter 2-3), so
     3-4 rounds typically suffice; ``max_iter`` bounds pathological chains.
-    Each round is ONE shuffle job (neighbor-min join+agg, checkpointed)
-    plus a scan-only convergence count over the checkpointed partitions —
-    the changed flag is computed inside the round's join rather than by a
+    Each round is ONE shuffle job (neighbor-min join+agg) plus the 1-row
+    signature job of graph_rank's :func:`_fixpoint` loop, which pins the
+    round and stops at the first round that changes no label — no
     separate old-vs-new shuffle join (which doubled per-round job count).
-    ``localCheckpoint`` truncates lineage each round; critically the EDGE
+    The pin truncates lineage each round; critically the EDGE
     frame is checkpointed too — edges arrive as the output of a whole
     candidate-generation pipeline (LSH banding etc.), and without pinning
     them every round would re-run that upstream job (measured: the rounds,
@@ -2068,11 +2032,12 @@ def connected_components(
 def _cc_propagate(
     edges: DataFrame, max_iter: int, stats: dict | None = None
 ) -> DataFrame:
-    """Min-label propagation loop over a PINNED (localCheckpoint'ed) edge
-    frame — see :func:`connected_components` for the contract. The
-    direction union is built lazily over the pinned frame (two cache scans
-    per round, no second materialization pass, no re-run of the upstream
-    candidate pipeline)."""
+    """Min-label propagation over a PINNED (localCheckpoint'ed) edge frame
+    — see :func:`connected_components` for the contract. The direction
+    union is built lazily over the pinned frame (two cache scans per
+    round, no re-run of the upstream candidate pipeline); rounds run
+    through graph_rank's :func:`_fixpoint` loop, which stops at the first
+    round that changes no label."""
     undirected = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -2080,30 +2045,27 @@ def _cc_propagate(
         undirected.select(F.col("src").alias("id"))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    for rnd in range(max_iter):
+
+    def step(labels: DataFrame) -> DataFrame:
         neighbor_min = (
             undirected.join(labels, undirected.src == labels.id)
             .groupBy(F.col("dst").alias("id"))
             .agg(F.min("label").alias("nmin"))
         )
-        flagged = (
-            labels.join(neighbor_min, "id", "left")
-            .select(
-                "id",
-                F.least("label", "nmin").alias("label"),
-                (F.col("nmin") < F.col("label")).alias("chg"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(neighbor_min, "id", "left").select(
+            "id", F.least("label", "nmin").alias("label")
         )
-        changed = flagged.filter(F.col("chg")).count()
-        labels = flagged.select("id", "label")
-        if changed == 0:
-            if stats is not None:
-                stats["rounds"] = rnd + 1
-            return labels.select("id", F.col("label").alias("component"))
-    raise RuntimeError(f"connected_components did not converge in {max_iter} rounds")
+
+    loop = _fixpoint(labels, step, max_iter, track=True)
+    if not loop.converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds"
+        )
+    if stats is not None:
+        stats["rounds"] = loop.rounds
+    return loop.frame.select("id", F.col("label").alias("component"))
 
 
 def dedup_clusters(

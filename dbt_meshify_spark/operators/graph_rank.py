@@ -1,14 +1,18 @@
-"""Iterative link-analysis over an edges frame: PageRank.
+"""Graph analytics over an edges frame: PageRank, triangle counts, k-core
+and core numbers, and label propagation.
 
 The scale path for the metadata plane's DAG analytics (SURVEY.md §2.1 maps
 graph ops onto nodes/edges DataFrames) and for corpus-level link graphs
 (page/domain authority as a quality prior — the classic web-curation
-signal). Same iterative-DataFrame posture as dedup.py::connected_components:
-each round is one equi-join + one aggregate, with ``localCheckpoint`` per
-round so lineage (and thus replay cost / stack depth) stays O(1) instead of
-O(iters).
+signal). Every iterative operator is a round of equi-joins and map-side
+combinable aggregates keyed on node ids. The fixpoint operators (kcore,
+core_numbers, label_propagation and dedup.py's connected-components tiers)
+all run through :func:`_fixpoint`, the one convergence loop: it pins each
+round, so lineage (and thus replay cost / stack depth) stays O(1) instead of
+O(iters), and decides when a round pays a signature job and when the loop
+stops early. PageRank has no convergence check and keeps its own loop.
 
-Model: damped PageRank with dangling handling selectable per call —
+PageRank model: damped PageRank with dangling handling selectable per call —
 ``dangling="teleport"`` (dangling nodes keep the teleport term only; the
 simplification every join-based implementation uses) or
 ``dangling="redistribute"`` (the standard correction: each round the mass
@@ -19,7 +23,10 @@ spam ring's rank should not leak out of the system through its sinks).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -189,18 +196,7 @@ def triangle_counts(
     """
     if orient not in ("id", "degree"):
         raise ValueError(f"unknown triangle_counts orient: {orient!r}")
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
-        )
-        .filter(
-            F.col("lo").isNotNull()
-            & F.col("hi").isNotNull()
-            & (F.col("lo") < F.col("hi"))
-        )
-        .distinct()
-    )
+    e = _canonical_edges(edges, src_col, dst_col)
     if orient == "degree":
         o = _orient_by_degree(e).localCheckpoint(eager=False)
         w1 = o.select(F.col("u").alias("a"), F.col("v").alias("b"), F.col("rv").alias("rb"))
@@ -224,7 +220,7 @@ def triangle_counts(
 
 
 def _canonical_edges(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
-    """Undirected canonical form shared by the peel family: (lo < hi),
+    """Undirected canonical form shared by every operator here: (lo < hi),
     NULL endpoints and self-loops dropped, duplicates and reversals
     collapsed by the distinct."""
     return (
@@ -248,15 +244,99 @@ def _und_edges(frame: DataFrame) -> DataFrame:
     )
 
 
-def _edge_sig(frame: DataFrame) -> tuple:
-    """Constant-size (count, decimal hash-sum) edge-set signature — the
-    peel loops' convergence check. Decimal sum: a BIGINT sum of
-    full-range xxhash64 values overflows under ANSI mode."""
+def _signature(frame: DataFrame) -> tuple:
+    """Constant-size, order-insensitive ``(count, hash sum)`` digest of a
+    frame: one 1-row aggregate job. The hash is xxhash64 over the columns
+    in name order (join rewrites reorder columns between rounds), summed
+    as decimal because a BIGINT sum of full-range xxhash64 values
+    overflows, which ANSI mode turns into ARITHMETIC_OVERFLOW. Equal
+    digests are read as equal frames — the same 64-bit hash posture as
+    the gram keys (SCALE.md)."""
     row = frame.agg(
         F.count("*").alias("n"),
-        F.sum(F.xxhash64("lo", "hi").cast("decimal(38,0)")).alias("h"),
+        F.sum(F.xxhash64(*sorted(frame.columns)).cast("decimal(38,0)")).alias("h"),
     ).collect()[0]
     return (row["n"], row["h"])
+
+
+class _Fixpoint(NamedTuple):
+    frame: DataFrame
+    rounds: int
+    converged: bool
+    sig: tuple | None
+
+
+def _fixpoint(
+    frame: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    budget: int,
+    track: bool = False,
+    sig: tuple | None = None,
+) -> _Fixpoint:
+    """The one convergence loop of the fixpoint operators (kcore,
+    core_numbers, label_propagation, and dedup.py's star and propagate
+    connected-components tiers): run ``step`` for up to ``budget`` rounds.
+
+    Every operator's step is a deterministic function of its input frame,
+    so once a round's :func:`_signature` repeats the previous one (or the
+    frame is empty — every step maps empty to empty), every remaining
+    round is a no-op. Stopping there returns exactly the fixed-``budget``
+    result, which is what the unrolled-CTE oracles replay.
+
+    Pins: each round's frame is pinned with a lazy ``localCheckpoint``, so
+    lineage stays O(1) in the round count. The pin stays even where the
+    frame has a single consumer: an interleaved LPA A/B (min-of-4, one
+    session, sf0.1) read 4.42 s pinned vs 5.21 s unpinned — the unpinned
+    multi-round plan costs more in planning/AQE replanning than the
+    per-round materialization it saves. A lazy pin folds into the next
+    signature job, one job per round fewer than an eager pin.
+
+    Gate (each signature is a 1-row job): with ``budget < 3`` and
+    ``track`` unset no signature is taken — the only checkable point would
+    be after round 1, and real graphs are never settled that early.
+    Otherwise the frame is checked after every round but the last, and
+    after the last too when ``track`` is set: the caller reports
+    ``stats["converged"]`` or must converge, and convergence needs
+    consecutive-round signatures, not just the final one. ``sig`` seeds
+    the signature of ``frame`` when the caller already holds it.
+
+    Returns the final frame, the rounds run, whether the loop reached the
+    fixpoint (False when no check decided it), and the last signature.
+    """
+    check = track or budget >= 3
+    if check and sig is None:
+        sig = _signature(frame)
+    rounds, converged = 0, False
+    while rounds < budget and not converged:
+        frame = step(frame).localCheckpoint(eager=False)
+        rounds += 1
+        if check and (track or rounds < budget):
+            new = _signature(frame)
+            converged = new == sig or new[0] == 0
+            sig = new
+    return _Fixpoint(frame, rounds, converged, sig)
+
+
+def _peel(k: int) -> Callable[[DataFrame], DataFrame]:
+    """One k-core peel round over a canonical (lo, hi) edge set: one
+    map-side-combinable degree aggregate keyed on node id, then one
+    left-semi join per endpoint drops every edge touching a node of
+    degree < ``k``. No shuffle carries more than (node, deg) / (lo, hi)
+    rows."""
+
+    def step(e: DataFrame) -> DataFrame:
+        keep = (
+            _und_edges(e)
+            .groupBy("u")
+            .agg(F.count(F.lit(1)).alias("deg"))
+            .filter(F.col("deg") >= k)
+            .select(F.col("u").alias("id"))
+        )
+        return e.join(keep.withColumnRenamed("id", "lo"), "lo", "left_semi").join(
+            keep.withColumnRenamed("id", "hi"), "hi", "left_semi"
+        )
+
+    return step
 
 
 def kcore(
@@ -273,27 +353,16 @@ def kcore(
     and low-engagement periphery peel away, leaving the dense interaction
     core where coordinated behavior lives).
 
-    Each peel round over the surviving undirected edge set: one degree
-    aggregate (map-side combinable, keyed on node id), one semi-join per
-    endpoint to drop edges touching a node of degree < ``k``. No shuffle
-    ever carries more than (node, degree) / (lo, hi) rows. Edges are
-    canonicalized (lo < hi, self-loops and NULLs dropped) and pinned with
-    ``localCheckpoint`` per round — the same O(1)-lineage loop as
-    ``pagerank``/``label_propagation``.
-
-    Fixed ``iters`` rounds make the result exactly reproducible by the
-    unrolled-CTE SQL oracle; the constant-size (count, decimal hash-sum)
-    edge-set signature (the ``_cc_star`` discipline) stops early at the
-    fixpoint, where every remaining round is a no-op — identical output,
-    fewer jobs. ``stats["rounds"]`` records the executed count and
-    ``stats["converged"]`` whether the peel reached the fixpoint inside
-    the budget: when False the result is a SUPERSET of the k-core (nodes
-    with deg < k can remain — e.g. a pendant chain deeper than ``iters``),
-    so callers that need a true k-core must check it. Cost of passing
-    ``stats``: one extra 1-row signature job on the full-budget exit
-    path when ``iters >= 3``; for ``iters <= 2`` (where the early-stop
-    is disabled) one per round — at most two — because convergence needs
-    consecutive-round signatures, not just the final one.
+    Edges are canonicalized (lo < hi, self-loops and NULLs dropped), then
+    :func:`_peel` rounds run through :func:`_fixpoint`, which pins each
+    round and stops early at the fixpoint. Fixed ``iters`` rounds make the
+    result exactly reproducible by the unrolled-CTE SQL oracle; the
+    early stop only skips no-op rounds. ``stats["rounds"]`` records the
+    executed count and ``stats["converged"]`` whether the peel reached the
+    fixpoint inside the budget: when False the result is a SUPERSET of the
+    k-core (nodes with deg < k can remain — e.g. a pendant chain deeper
+    than ``iters``), so callers that need a true k-core must check it.
+    Passing ``stats`` turns on the loop's ``track`` gate.
 
     Returns ``id, deg``: the endpoints of the surviving edge set with
     their degree inside it (at the fixpoint this IS the k-core, and every
@@ -301,50 +370,12 @@ def kcore(
     in no k-core for k >= 1).
     """
     e = _canonical_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
-    _und, _sig = _und_edges, _edge_sig
-
-    n_rounds = int(iters)
-    # signature checks only when the budget leaves rounds to skip (the
-    # label_propagation rationale: with iters <= 2 the sole checkable
-    # point is after round 1 — pure overhead); a stats dict opts into
-    # signature tracking regardless, so "converged" is always decidable
-    check = n_rounds >= 3
-    track = check or stats is not None
-    sig = _sig(e) if track else None
-    rounds = 0
-    converged = False
-    for r in range(n_rounds):
-        keep = (
-            _und(e)
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .filter(F.col("deg") >= k)
-            .select(F.col("u").alias("id"))
-        )
-        e = (
-            e.join(keep.withColumnRenamed("id", "lo"), "lo", "left_semi")
-            .join(keep.withColumnRenamed("id", "hi"), "hi", "left_semi")
-            .localCheckpoint(eager=False)
-        )
-        rounds += 1
-        if check and r < n_rounds - 1:
-            new_sig = _sig(e)
-            if new_sig == sig:
-                converged = True
-                break  # fixpoint: peeling is monotone, nothing more drops
-            sig = new_sig
-        elif stats is not None:
-            # full-budget exit with a caller watching: pay one extra 1-row
-            # job so a truncated peel (result still a k-core SUPERSET) is
-            # detectable instead of silently read as the fixpoint
-            new_sig = _sig(e)
-            converged = new_sig == sig
-            sig = new_sig
+    loop = _fixpoint(e, _peel(k), int(iters), track=stats is not None)
     if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
+        stats["rounds"] = loop.rounds
+        stats["converged"] = loop.converged
     return (
-        _und(e)
+        _und_edges(loop.frame)
         .groupBy("u")
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
         .select(F.col("u").alias("id"), "deg")
@@ -369,20 +400,18 @@ def core_numbers(
     (k-1)-core, so level k peels the PREVIOUS level's surviving edge set
     — each level starts from an already-reduced graph, and total work
     across levels is bounded by the (small) degeneracy, not k_max x
-    corpus. Every level runs :func:`kcore`'s exact per-round plan (one
-    map-side-combinable degree aggregate + two left-semi joins, nothing
-    wider than (node, deg)/(lo, hi) in any shuffle, localCheckpoint
-    lineage pinning) for at most ``iters_per_k`` rounds with the
-    constant-size signature early-stop; the per-round signature doubles
-    as the empty-graph check, so exhausted levels cost no extra jobs.
+    corpus. Every level runs :func:`kcore`'s :func:`_peel` round through
+    :func:`_fixpoint` for at most ``iters_per_k`` rounds with ``track``
+    set; the signature carries from one level to the next and doubles as
+    the empty-graph check, so exhausted levels cost no extra jobs.
 
     Fixed ``(k_max, iters_per_k)`` make the result exactly reproducible
-    by an unrolled-CTE oracle (the ``kcore`` discipline: the early-stop
-    only skips provably no-op rounds, so truncated-budget semantics are
-    deterministic and engine-identical). Every endpoint of the canonical
-    edge set gets ``core >= 1``; isolated input nodes never appear.
-    ``stats``: ``levels`` (deepest k that kept nodes), ``rounds`` (total
-    peel rounds executed), ``converged`` (False when ANY level exhausted
+    by an unrolled-CTE oracle (the early stop only skips provably no-op
+    rounds, so truncated-budget semantics are deterministic and
+    engine-identical). Every endpoint of the canonical edge set gets
+    ``core >= 1``; isolated input nodes never appear. ``stats``:
+    ``levels`` (deepest k that kept nodes), ``rounds`` (total peel rounds
+    executed), ``converged`` (False when ANY level exhausted
     ``iters_per_k`` before its fixpoint — the assigned core numbers are
     then an UPPER BOUND, the kcore truncation contract).
 
@@ -396,55 +425,29 @@ def core_numbers(
         # endpoints (the epoch_budget_plan max_epochs guard discipline)
         raise ValueError(f"iters_per_k must be >= 1, got {iters_per_k}")
     e = _canonical_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
-    _und, _sig = _und_edges, _edge_sig
 
-    levels = [
-        _und(e).select(F.col("u").alias("id")).distinct().withColumn(
-            "core", F.lit(1)
-        )
-    ]
+    def level(frame: DataFrame, k: int) -> DataFrame:
+        nodes = _und_edges(frame).select(F.col("u").alias("id")).distinct()
+        return nodes.withColumn("core", F.lit(k))
+
+    levels = [level(e, 1)]
     total_rounds = 0
     deepest = 1
     all_converged = True
-    sig = _sig(e)
+    sig = _signature(e)
     for k in range(2, int(k_max) + 1):
         if sig[0] == 0:
-            break
-        level_converged = False
-        for _r in range(int(iters_per_k)):
-            keep = (
-                _und(e)
-                .groupBy("u")
-                .agg(F.count(F.lit(1)).alias("deg"))
-                .filter(F.col("deg") >= k)
-                .select(F.col("u").alias("id"))
-            )
-            e = (
-                e.join(keep.withColumnRenamed("id", "lo"), "lo", "left_semi")
-                .join(keep.withColumnRenamed("id", "hi"), "hi", "left_semi")
-                .localCheckpoint(eager=False)
-            )
-            total_rounds += 1
-            new_sig = _sig(e)
-            if new_sig == sig:
-                level_converged = True
-                break  # fixpoint for this k: nothing more drops
-            sig = new_sig
-            if sig[0] == 0:
-                level_converged = True  # empty IS a fixpoint
-                break
-        if sig[0] == 0:
             break  # emptied: a fixpoint for this and every higher k
+        loop = _fixpoint(e, _peel(k), int(iters_per_k), track=True, sig=sig)
+        e, sig = loop.frame, loop.sig
+        total_rounds += loop.rounds
+        if sig[0] == 0:
+            break
         # a level that exhausted its budget mid-peel kept sub-k nodes: the
         # assigned core numbers are an UPPER BOUND, and the caller can tell
-        # (the same contract as kcore's stats["converged"])
-        all_converged = all_converged and level_converged
+        all_converged = all_converged and loop.converged
         deepest = k
-        levels.append(
-            _und(e).select(F.col("u").alias("id")).distinct().withColumn(
-                "core", F.lit(k)
-            )
-        )
+        levels.append(level(e, k))
     if stats is not None:
         stats["levels"] = deepest
         stats["rounds"] = total_rounds
@@ -484,81 +487,35 @@ def label_propagation(
     (node, label, count). The self-vote rides as a self-loop voter edge
     (identical votes multiset: every und edge contributes its endpoint's
     label once and the (id, id) self-loop joins the node's own label once)
-    so each round's label frame is read ONCE instead of twice.
-    ``localCheckpoint`` per round pins the frame and truncates lineage
-    exactly like the CC/pagerank loops. Self-loops and NULL endpoints are
-    dropped; each undirected edge votes in both directions.
+    so each round's label frame is read ONCE instead of twice. Self-loops
+    and NULL endpoints are dropped; each undirected edge votes in both
+    directions.
 
-    Convergence early-stop (the ``_cc_star`` discipline): after each round
-    a constant-size (decimal xxhash64-sum) signature of the checkpointed
-    label frame is compared to the previous round's — synchronous LPA is a
-    deterministic function of the label frame, so a repeated signature
-    means EVERY remaining round is a no-op and the loop exits with the
-    exact fixed-``iters`` result (the unrolled-CTE oracle is unchanged).
-    The signature is a 1-row aggregate over the frame the next round
-    would materialize anyway, so stable graphs stop paying join rounds the
-    moment communities settle. ``stats["rounds"]`` records the executed
-    count when a dict is passed, and ``stats["converged"]`` whether the
-    final label frame is a fixpoint (the kcore truncation contract: when
-    False the labels are a mid-propagation snapshot — exact for the
-    fixed ``iters``, but not the settled communities).
+    Rounds run through :func:`_fixpoint`, which pins each label frame and
+    stops early once it repeats — the exact fixed-``iters`` result, so the
+    unrolled-CTE oracle is unchanged. ``stats["rounds"]`` records the
+    executed count when a dict is passed, and ``stats["converged"]``
+    whether the final label frame is a fixpoint (the kcore truncation
+    contract: when False the labels are a mid-propagation snapshot —
+    exact for the fixed ``iters``, but not the settled communities).
 
     Returns ``id, community`` (community = the adopted label).
     """
-    # canonicalize to (lo, hi) BEFORE the distinct: the reversal union is
-    # then dup-free by construction, saving a second corpus-sized distinct
-    # exchange over the doubled edge list
     # pin the canonical edge set BEFORE the direction union: materializing
     # the union first re-ran the whole upstream edge derivation (join +
     # distinct) once per branch — the connected_components finding. The
-    # union itself is now two cache scans per round, so no second pin.
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("lo"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("hi"),
-        )
-        .filter(
-            F.col("lo").isNotNull()
-            & F.col("hi").isNotNull()
-            & (F.col("lo") < F.col("hi"))
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    und = e.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionByName(
-        e.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
+    # union itself is two cache scans per round, so no second pin.
+    und = _und_edges(
+        _canonical_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
     )
     nodes = (
         und.select(F.col("u").alias("id")).distinct().localCheckpoint(eager=False)
     )
-    # the self-vote rides as a self-loop edge (u, u) so each round's label
-    # frame is referenced exactly ONCE (the voters join) instead of twice
-    # (neighbor join + own-label union): identical votes multiset — every
-    # und edge contributes its endpoint's label once, and the (id, id)
-    # self-loop joins each node's own current label once
     voters = und.unionByName(
         nodes.select(F.col("id").alias("u"), F.col("id").alias("v"))
     )
-    labels = nodes.select("id", F.col("id").alias("community"))
 
-    def _sig(frame: DataFrame):
-        # order-insensitive digest; decimal sum because a BIGINT sum of
-        # full-range xxhash64 values overflows under ANSI mode
-        return frame.agg(
-            F.sum(F.xxhash64("id", "community").cast("decimal(38,0)")).alias("h")
-        ).collect()[0]["h"]
-
-    n_rounds = int(iters)
-    # signature checks are worth their 1-row jobs only when the budget
-    # leaves rounds to skip: with iters <= 2 the sole checkable point is
-    # after round 1, and real graphs are never settled that early — the
-    # two collects would be pure overhead on every call
-    check = n_rounds >= 3
-    track = check or stats is not None
-    sig = _sig(labels) if track else None
-    rounds = 0
-    converged = False
-    for r in range(n_rounds):
+    def step(labels: DataFrame) -> DataFrame:
         votes = (
             voters.join(labels, voters["v"] == labels["id"])
             .groupBy(F.col("u"), F.col("community"))
@@ -577,35 +534,13 @@ def label_propagation(
             )
             .select(F.col("u").alias("id"), F.col("__best.community").alias("community"))
         )
-        labels = (
-            nodes.join(best, "id", "left")
-            .select(
-                "id", F.coalesce("community", F.col("id")).alias("community")
-            )
-            # keep the per-round pin even though the voters restructure
-            # made labels single-consumer: an interleaved A/B (min-of-4,
-            # one session, sf0.1) read 4.42 s pinned vs 5.21 s unpinned —
-            # the unpinned multi-round plan costs more in planning/AQE
-            # replanning than the per-round materialization job it saves
-            # (the opposite of the pagerank teleport chain, where no-pin
-            # measured neutral-to-better and was kept)
-            .localCheckpoint(eager=False)
+        return nodes.join(best, "id", "left").select(
+            "id", F.coalesce("community", F.col("id")).alias("community")
         )
-        rounds += 1
-        if check and r < n_rounds - 1:
-            new_sig = _sig(labels)
-            if new_sig == sig:
-                converged = True
-                break  # fixpoint: every remaining round would be a no-op
-            sig = new_sig
-        elif stats is not None:
-            # full-budget exit (or iters <= 2) with a caller watching:
-            # consecutive-round signatures decide whether the final round
-            # was already a no-op (the kcore truncation contract)
-            new_sig = _sig(labels)
-            converged = new_sig == sig
-            sig = new_sig
+
+    labels = nodes.select("id", F.col("id").alias("community"))
+    loop = _fixpoint(labels, step, int(iters), track=stats is not None)
     if stats is not None:
-        stats["rounds"] = rounds
-        stats["converged"] = converged
-    return labels
+        stats["rounds"] = loop.rounds
+        stats["converged"] = loop.converged
+    return loop.frame

@@ -962,94 +962,96 @@ def streaming_probe(spark, sf_dir: str) -> None:
     )
 
     root = tempfile.mkdtemp(prefix="stream_probe_")
-    base_docs = load_table(spark, sf_dir, "documents")
+    try:
+        base_docs = load_table(spark, sf_dir, "documents")
 
-    def scaled(base, k: int, shift_col: str, shift: int):
-        parts = [base]
-        for i in range(1, k):
-            parts.append(
-                base.withColumn(shift_col, F.col(shift_col) + F.lit(i * shift))
+        def scaled(base, k: int, shift_col: str, shift: int):
+            parts = [base]
+            for i in range(1, k):
+                parts.append(
+                    base.withColumn(shift_col, F.col(shift_col) + F.lit(i * shift))
+                )
+            out = parts[0]
+            for pt in parts[1:]:
+                out = out.unionByName(pt)
+            return out
+
+        for k in (1, 8, 16):
+            path = f"{root}/docs_{k}"
+            scaled(base_docs, k, "doc_id", 10_000_000).repartition(
+                4 * k
+            ).write.mode("overwrite").parquet(path)
+            out_dir = f"{root}/cms_{k}"
+            feed = read_documents_stream(spark, path, max_files_per_trigger=4)
+            t0 = _t.time()
+            hh = stream_cms_heavy_hitters(feed, spark.read.parquet(path), out_dir)
+            n_hh = hh.count()
+            t_cms = _t.time() - t0
+            cells = spark.read.parquet(f"{out_dir}/cells").count()
+            batches = len(
+                [d for d in os.listdir(f"{out_dir}/cells") if d.startswith("batch=")]
             )
-        out = parts[0]
-        for pt in parts[1:]:
-            out = out.unionByName(pt)
-        return out
-
-    for k in (1, 8, 16):
-        path = f"{root}/docs_{k}"
-        scaled(base_docs, k, "doc_id", 10_000_000).repartition(
-            4 * k
-        ).write.mode("overwrite").parquet(path)
-        out_dir = f"{root}/cms_{k}"
-        feed = read_documents_stream(spark, path, max_files_per_trigger=4)
-        t0 = _t.time()
-        hh = stream_cms_heavy_hitters(feed, spark.read.parquet(path), out_dir)
-        n_hh = hh.count()
-        t_cms = _t.time() - t0
-        cells = spark.read.parquet(f"{out_dir}/cells").count()
-        batches = len(
-            [d for d in os.listdir(f"{out_dir}/cells") if d.startswith("batch=")]
-        )
-        assert cells <= batches * 4 * 1024, (cells, batches)
-        es_dir = f"{root}/es_{k}"
-        feed2 = read_documents_stream(spark, path, max_files_per_trigger=4)
-        t0 = _t.time()
-        samp = stream_weighted_sample(
-            feed2, es_dir, k=50, weight_col="n_chars", key_cols=["doc_id"]
-        )
-        n_s = samp.count()
-        t_es = _t.time() - t0
-        cands = spark.read.parquet(f"{es_dir}/cands").count()
-        assert cands <= batches * 50 and n_s == 50, (cands, batches, n_s)
-        print(
-            f"docs scale={k}x batches={batches}: cms drain={t_cms:.2f}s "
-            f"state_cells={cells} (cap {batches * 4096}); es drain="
-            f"{t_es:.2f}s cand_state={cands} (cap {batches * 50})",
-            flush=True,
-        )
-
-    base_ev = load_table(spark, sf_dir, "events")
-    uid_shift = base_ev.agg(F.max("user_id")).collect()[0][0] + 1
-    for k in (1, 4, 8):
-        path = f"{root}/ev_{k}"
-        ev = scaled(base_ev, k, "user_id", uid_shift).withColumn(
-            "event_id",
-            F.col("event_id") + (F.col("user_id") / uid_shift).cast("bigint") * 10_000_000,
-        )
-        ev.repartition(4 * k).write.mode("overwrite").parquet(path)
-        clicks = read_events_stream(spark, path, max_files_per_trigger=4).filter(
-            F.col("event_type") == "click"
-        )
-        purchases = read_events_stream(
-            spark, path, max_files_per_trigger=4
-        ).filter(F.col("event_type") == "purchase")
-        pairs = stream_stream_join_clicks_to_purchases(clicks, purchases)
-        name = f"probe_join_{k}"
-        t0 = _t.time()
-        with stream_state_partitions(spark, 16):
-            q = (
-                pairs.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
+            assert cells <= batches * 4 * 1024, (cells, batches)
+            es_dir = f"{root}/es_{k}"
+            feed2 = read_documents_stream(spark, path, max_files_per_trigger=4)
+            t0 = _t.time()
+            samp = stream_weighted_sample(
+                feed2, es_dir, k=50, weight_col="n_chars", key_cols=["doc_id"]
             )
-            q.awaitTermination()
-        t_j = _t.time() - t0
-        prog = q.lastProgress
-        state_rows = (
-            sum(op["numRowsTotal"] for op in prog["stateOperators"])
-            if prog and prog.get("stateOperators")
-            else -1
-        )
-        n_pairs = spark.table(name).count()
-        n_input = spark.read.parquet(path).count()
-        print(
-            f"events scale={k}x: join drain={t_j:.2f}s pairs={n_pairs} "
-            f"final_state_rows={state_rows} input_rows={n_input}",
-            flush=True,
-        )
-    shutil.rmtree(root, ignore_errors=True)
+            n_s = samp.count()
+            t_es = _t.time() - t0
+            cands = spark.read.parquet(f"{es_dir}/cands").count()
+            assert cands <= batches * 50 and n_s == 50, (cands, batches, n_s)
+            print(
+                f"docs scale={k}x batches={batches}: cms drain={t_cms:.2f}s "
+                f"state_cells={cells} (cap {batches * 4096}); es drain="
+                f"{t_es:.2f}s cand_state={cands} (cap {batches * 50})",
+                flush=True,
+            )
+
+        base_ev = load_table(spark, sf_dir, "events")
+        uid_shift = base_ev.agg(F.max("user_id")).collect()[0][0] + 1
+        for k in (1, 4, 8):
+            path = f"{root}/ev_{k}"
+            ev = scaled(base_ev, k, "user_id", uid_shift).withColumn(
+                "event_id",
+                F.col("event_id") + (F.col("user_id") / uid_shift).cast("bigint") * 10_000_000,
+            )
+            ev.repartition(4 * k).write.mode("overwrite").parquet(path)
+            clicks = read_events_stream(spark, path, max_files_per_trigger=4).filter(
+                F.col("event_type") == "click"
+            )
+            purchases = read_events_stream(
+                spark, path, max_files_per_trigger=4
+            ).filter(F.col("event_type") == "purchase")
+            pairs = stream_stream_join_clicks_to_purchases(clicks, purchases)
+            name = f"probe_join_{k}"
+            t0 = _t.time()
+            with stream_state_partitions(spark, 16):
+                q = (
+                    pairs.writeStream.format("memory")
+                    .queryName(name)
+                    .outputMode("append")
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+            t_j = _t.time() - t0
+            prog = q.lastProgress
+            state_rows = (
+                sum(op["numRowsTotal"] for op in prog["stateOperators"])
+                if prog and prog.get("stateOperators")
+                else -1
+            )
+            n_pairs = spark.table(name).count()
+            n_input = spark.read.parquet(path).count()
+            print(
+                f"events scale={k}x: join drain={t_j:.2f}s pairs={n_pairs} "
+                f"final_state_rows={state_rows} input_rows={n_input}",
+                flush=True,
+            )
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
 
 

@@ -1019,15 +1019,15 @@ def test_winnow_overlap_counts_join_after_pair_aggregate(spark):
     assert plan.count("Scan parquet") == 0, "a branch re-reads the corpus"
 
 
-def test_stop_gram_caps_are_broadcast_anti_drop_joins(spark):
+def test_stop_gram_caps_are_broadcast_anti_drop_joins(spark, monkeypatch):
     """r14 shape (guide §2.3/§3.2): the n-gram and winnow stop-gram caps
     anti-join against the DROP list (grams/prints with df above the cap —
     a handful of boilerplate keys by Zipf, broadcastable at any scale)
     instead of shuffle- or broadcast-joining the near-vocabulary-sized
     KEEP list; and the gram index carries xxhash64 longs, never gram
     strings, so every gram-keyed exchange moves 8-byte keys. The caps sit
-    inside the staging pins, so this guard inspects the unpinned lineage
-    (_pin=False test hook)."""
+    inside the staging pins, so this guard turns pins into no-ops to
+    inspect the unpinned lineage."""
     from dbt_meshify_spark.operators.dedup import (
         _kept_gram_index,
         winnow_overlap_pairs,
@@ -1035,16 +1035,32 @@ def test_stop_gram_caps_are_broadcast_anti_drop_joins(spark):
     from dbt_meshify_spark.sources.registry import load_table
 
     docs = load_table(spark, SF_ORACLE, "documents")
-    kept, _ = _kept_gram_index(docs, "doc_id", "text", 3, 10_000, _pin=False)
-    plan = _physical(kept)
-    assert "LeftAnti" in plan, "gram cap regressed to a keep-list join"
-    assert "xxhash64" in plan, "gram index shuffles strings, not 8-byte keys"
-    assert "SortMergeJoin" not in plan, "drop list not broadcast"
-
-    plan = _physical(
-        winnow_overlap_pairs(docs, max_print_df=10_000, _pin=False)
+    # the session's concrete DataFrame class (pyspark.sql.DataFrame is its
+    # abstract base, whose method the classic class overrides)
+    monkeypatch.setattr(
+        type(docs), "localCheckpoint", lambda self, eager=True: self
     )
-    assert "LeftAnti" in plan, "print cap regressed to a keep-list join"
+    # size-based broadcasting off: at this scale the optimizer broadcasts
+    # the drop lists anyway, so only the explicit hints keep the anti-joins
+    # off a sort-merge join
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        kept, _ = _kept_gram_index(docs, "doc_id", "text", 3, 10_000)
+        gram_plan = _physical(kept)
+        winnow_plan = _physical(winnow_overlap_pairs(docs, max_print_df=10_000))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+    assert "LeftAnti" in gram_plan, "gram cap regressed to a keep-list join"
+    assert "xxhash64" in gram_plan, "gram index shuffles strings, not 8-byte keys"
+    assert "SortMergeJoin" not in gram_plan, "drop list not broadcast"
+
+    assert "LeftAnti" in winnow_plan, "print cap regressed to a keep-list join"
+    # the pair self-join is a sort-merge join here; only the cap must not be
+    anti = [l for l in winnow_plan.splitlines() if "LeftAnti" in l]
+    assert all("SortMergeJoin" not in l for l in anti), (
+        "print drop list not broadcast"
+    )
 
 
 def test_embedding_neardup_lsh_scores_each_pair_once(spark):
