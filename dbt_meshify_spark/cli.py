@@ -31,6 +31,7 @@ from dbt_meshify_spark.plans.splitter import (
 from dbt_meshify_spark.plans.versions import BumpBehavior, add_version, bump_version
 from dbt_meshify_spark.project.loader import SparkProject
 from dbt_meshify_spark.project.runner import ProjectRunner
+from dbt_meshify_spark.yamlio import load_yaml
 
 
 class MultiOption(click.Option):
@@ -421,8 +422,6 @@ def op_create_group(
     if not select and not selector:
         raise click.ClickException("one of --select/--selector is required")
     project = SparkProject.load(project_path)
-    import yaml as _yaml
-
     owner = {
         k: v for k, v in (("name", owner_name), ("email", owner_email)) if v
     }
@@ -430,7 +429,7 @@ def op_create_group(
         raise click.ClickException("an owner (--owner-name/--owner-email) is required")
     if owner_properties:
         # reference main.py:612: extra properties merge into the Owner dict
-        owner.update(_yaml.safe_load(owner_properties) or {})
+        owner.update(load_yaml(owner_properties) or {})
     selected = _select(project, select, exclude, selector)
     path = Path(group_yml_path) if group_yml_path else project.root / "models/_groups.yml"
     changes = plan_create_group(
@@ -468,8 +467,6 @@ def group(
     if not select and not selector:
         raise click.ClickException("one of --select/--selector is required")
     project = SparkProject.load(project_path)
-    import yaml as _yaml
-
     owner = {
         k: v for k, v in (("name", owner_name), ("email", owner_email)) if v
     }
@@ -477,7 +474,7 @@ def group(
         raise click.ClickException("an owner (--owner-name/--owner-email) is required")
     if owner_properties:
         # reference main.py:612: extra properties merge into the Owner dict
-        owner.update(_yaml.safe_load(owner_properties) or {})
+        owner.update(load_yaml(owner_properties) or {})
     selected = _select(project, select, exclude, selector)
     schemas = _lazy_schemas(project)
     path = Path(group_yml_path) if group_yml_path else project.root / "models/_groups.yml"
@@ -607,12 +604,10 @@ def run(select, exclude, project_path, warehouse_dir, full_refresh, vars_, state
     """Materialize models on Spark in DAG order (the reference shells into
     `dbt run`, dbt.py:36-65; here the engine executes directly). Writes
     target/manifest.json for later state:modified runs."""
-    import yaml as _yaml
-
     from dbt_meshify_spark.session import get_spark
 
     project = SparkProject.load(
-        project_path, vars=_yaml.safe_load(vars_) if vars_ else None
+        project_path, vars=load_yaml(vars_) if vars_ else None
     )
     sel: list[str] | None = list(select) or None
     if sel and state:

@@ -12,6 +12,19 @@ Behavioral parity targets (reference, cited for the judge):
 - File managers with empty-collection pruning + delete-when-empty:
   file_manager.py:47-147, file_content_editors.py:219-244.
 
+Property-file I/O is batched per ``ChangeSetProcessor.process`` call. The
+first resource change (update/add/append/remove of a named entry) on a
+path reads and parses the file once; later changes to that path edit the
+buffered document. A remove that leaves nothing but ``version`` makes the
+file a pending delete, which a later add on the same path revives. The
+buffer is flushed (each edited file written once, pending deletes unlinked)
+before every Code, raw-file or Directory change, at the end, and when a
+change fails, before ``ChangeSetProcessorException`` is raised. So anything
+that reads the disk sees what applying the changes one by one would have
+left. ``read_yaml``/``write_yaml`` are the only functions that read and
+write property files here; ``ResourceFileEditor.update``/``remove`` used on
+their own still write through.
+
 All original code; executes on the driver (file + catalog mutations are
 bounded metadata, never data-plane work).
 """
@@ -25,6 +38,8 @@ from pathlib import Path
 from typing import Any, Callable, Iterator
 
 import yaml
+
+from dbt_meshify_spark.yamlio import load_yaml
 
 
 class Operation(str, Enum):
@@ -218,7 +233,7 @@ def _prune_empty(value: Any) -> Any:
 def read_yaml(path: Path) -> dict:
     if not path.exists():
         return {}
-    return yaml.safe_load(path.read_text()) or {}
+    return load_yaml(path) or {}
 
 
 def write_yaml(path: Path, doc: dict) -> None:
@@ -232,7 +247,11 @@ class ResourceFileEditor:
     """Structured YAML patching: update/remove a named entry inside a
     property file, handling source-table nesting and deleting the file when
     its last resource is removed (reference file_content_editors.py:96-244,
-    dbt_project_editors.py:354-389)."""
+    dbt_project_editors.py:354-389).
+
+    ``update``/``remove`` read and write the file (write-through);
+    ``apply_update``/``apply_remove`` edit a parsed document, for callers
+    that batch the I/O."""
 
     def __init__(self, entity_type: EntityType) -> None:
         self.entity_type = entity_type
@@ -241,7 +260,17 @@ class ResourceFileEditor:
         return self.entity_type.pluralized
 
     def update(self, path: Path, identifier: str, patch: dict) -> None:
-        doc = read_yaml(path)
+        write_yaml(path, self.apply_update(read_yaml(path), identifier, patch))
+
+    def remove(self, path: Path, identifier: str) -> None:
+        doc = self.apply_remove(read_yaml(path), identifier)
+        if doc is None:
+            path.unlink(missing_ok=True)
+        else:
+            write_yaml(path, doc)
+
+    def apply_update(self, doc: dict, identifier: str, patch: dict) -> dict:
+        """``doc`` with ``patch`` deep-merged into the entry ``identifier``."""
         doc.setdefault("version", 2)
         section = doc.get(self._section()) or []
         entries = named_list_to_dict(section)
@@ -270,10 +299,11 @@ class ResourceFileEditor:
             safe_update(entries[identifier], patch)
             entries[identifier] = format_resource(entries[identifier])
         doc[self._section()] = self._to_list(entries)
-        write_yaml(path, doc)
+        return doc
 
-    def remove(self, path: Path, identifier: str) -> None:
-        doc = read_yaml(path)
+    def apply_remove(self, doc: dict, identifier: str) -> dict | None:
+        """``doc`` without the entry ``identifier``; None when nothing but
+        ``version`` would remain (the file is to be deleted)."""
         entries = named_list_to_dict(doc.get(self._section()) or [])
         if self.entity_type == EntityType.Source and "." in identifier:
             src_name, table_name = identifier.split(".", 1)
@@ -293,10 +323,7 @@ class ResourceFileEditor:
             for k, v in doc.items()
             if k != "version" and v not in (None, [], {})
         ]
-        if not remaining:
-            path.unlink(missing_ok=True)
-        else:
-            write_yaml(path, doc)
+        return doc if remaining else None
 
     @staticmethod
     def _to_list(entries: dict) -> list:
@@ -371,6 +398,41 @@ class ChangeSetProcessorException(Exception):
         super().__init__(f"Error processing change {change.describe()}")
 
 
+class _PropertyFiles:
+    """Parsed property files of one ``ChangeSetProcessor.process`` call,
+    keyed by resolved path (two spellings of one file share a document):
+    each file is read at most once and written once per flush. A document
+    emptied by a remove is a pending delete (None)."""
+
+    def __init__(self) -> None:
+        self.docs: dict[Path, dict | None] = {}
+        self.edited_by: dict[Path, Change] = {}  # dirty files -> last edit
+
+    def edit(self, change: Change, apply: Callable[[dict], dict | None]) -> None:
+        key = change.path.resolve()
+        if key not in self.docs:
+            self.docs[key] = read_yaml(change.path)
+        doc = apply(self.docs[key] or {})
+        # write_yaml prunes empty collections, so the write-through editor
+        # read them back pruned; the rebuilt containers also keep later
+        # merges from aliasing (and mutating) any Change.data
+        self.docs[key] = None if doc is None else _prune_empty(doc)
+        self.edited_by[key] = change
+
+    def flush(self) -> None:
+        for key, change in self.edited_by.items():
+            doc = self.docs[key]
+            try:
+                if doc is None:
+                    change.path.unlink(missing_ok=True)
+                else:
+                    write_yaml(change.path, doc)
+            except Exception as e:
+                raise ChangeSetProcessorException(change, e) from e
+        self.docs.clear()
+        self.edited_by.clear()
+
+
 class ChangeSetProcessor:
     """Ordered, logged, dry-run-able execution (reference
     change_set_processor.py:24-61)."""
@@ -382,6 +444,7 @@ class ChangeSetProcessor:
     def process(self, change_sets: list[ChangeSet]) -> None:
         step = 0
         total = sum(len(cs) for cs in change_sets)
+        files = _PropertyFiles()
         for cs in change_sets:
             for change in cs:
                 step += 1
@@ -389,23 +452,30 @@ class ChangeSetProcessor:
                 if self.dry_run:
                     continue
                 try:
-                    self._apply(change)
+                    self._apply(change, files)
+                except ChangeSetProcessorException:
+                    raise  # a flush failed; it names the change that edited the file
                 except Exception as e:
+                    files.flush()
                     raise ChangeSetProcessorException(change, e) from e
+        files.flush()
 
-    def _apply(self, change: Change) -> None:
+    def _apply(self, change: Change, files: _PropertyFiles) -> None:
         if change.entity_type == EntityType.Directory:
+            files.flush()
             DirectoryEditor.apply(change)
         elif change.entity_type == EntityType.Code or isinstance(change.data, str) or (
             change.data is None and change.operation in (Operation.Copy, Operation.Move, Operation.Remove)
             and change.path.suffix != ".yml"
         ):
+            files.flush()
             RawFileEditor.apply(change)
         else:
             editor = ResourceFileEditor(change.entity_type)
             if change.operation in (Operation.Add, Operation.Update, Operation.Append):
-                editor.update(change.path, change.identifier, change.data or {})
+                files.edit(change, lambda doc: editor.apply_update(
+                    doc, change.identifier, change.data or {}))
             elif change.operation == Operation.Remove:
-                editor.remove(change.path, change.identifier)
+                files.edit(change, lambda doc: editor.apply_remove(doc, change.identifier))
             else:
                 raise ValueError(f"unsupported resource op {change.operation}")

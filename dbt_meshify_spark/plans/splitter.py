@@ -157,6 +157,8 @@ class SubprojectCreator:
         # model name -> [{name, data_type}] for contract generation; falls
         # back to property-file columns when the warehouse schema is absent.
         self.catalog = catalog or {}
+        # parent property files parsed by _yml_entry; planning writes nothing
+        self._docs: dict[Path, dict] = {}
 
     # -- path helpers --------------------------------------------------------
 
@@ -215,14 +217,15 @@ class SubprojectCreator:
         )
 
     def _yml_entry(self, resource: Resource) -> dict | None:
-        """Read the resource's current property-file entry from disk
-        (reference dbt_project_editors.py:66-90 load_resource_yml)."""
+        """Read the resource's current property-file entry from disk, each
+        file once per plan (reference dbt_project_editors.py:66-90
+        load_resource_yml)."""
         if not resource.patch_path:
             return None
         path = self.parent.root / resource.patch_path
-        if not path.exists():
-            return None
-        doc = read_yaml(path)
+        if path not in self._docs:
+            self._docs[path] = read_yaml(path)
+        doc = self._docs[path]
         section = _ENTITY_BY_TYPE.get(
             resource.resource_type, EntityType.Model
         ).pluralized

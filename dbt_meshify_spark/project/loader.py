@@ -15,12 +15,24 @@ from dataclasses import dataclass, field
 from pathlib import Path
 from typing import Any
 
-import yaml
-
 from dbt_meshify_spark.plans.manifest import Manifest, Resource
 from dbt_meshify_spark.project.compiler import JinjaCompiler
+from dbt_meshify_spark.yamlio import load_yaml
 
 _TEST_SHORTHAND = ("unique", "not_null")
+_REF_CALL = re.compile(r"ref\s*\(\s*['\"](\w+)['\"]\s*\)")
+
+
+def _string_leaves(value: Any) -> list[str]:
+    """Every string value inside a parsed YAML entry (dict values and list
+    items, at any depth)."""
+    if isinstance(value, str):
+        return [value]
+    if isinstance(value, dict):
+        value = value.values()
+    elif not isinstance(value, list):
+        return []
+    return [s for v in value for s in _string_leaves(v)]
 
 
 @dataclass
@@ -52,7 +64,7 @@ class SparkProject:
     def load(cls, root: str | Path, vars: dict[str, Any] | None = None) -> "SparkProject":
         root = Path(root)
         cfg_path = root / "dbt_project.yml"
-        config = yaml.safe_load(cfg_path.read_text()) if cfg_path.exists() else {}
+        config = load_yaml(cfg_path) if cfg_path.exists() else {}
         project = cls(root, config or {})
         if vars:
             project.vars.update(vars)
@@ -191,7 +203,7 @@ class SparkProject:
             if not mdir.is_dir():
                 continue
             for f in sorted(mdir.rglob("*.yml")) + sorted(mdir.rglob("*.yaml")):
-                doc = yaml.safe_load(f.read_text()) or {}
+                doc = load_yaml(f) or {}
                 rel = str(f.relative_to(self.root))
                 self._apply_model_patches(doc.get("models") or [], rel)
                 self._apply_model_patches(
@@ -326,10 +338,11 @@ class SparkProject:
         for entry in entries:
             name = entry.get("name")
             uid = f"{rtype}.{self.name}.{name}"
-            deps: list[str] = []
-            blob = yaml.safe_dump(entry)
-            for m in re.finditer(r"ref\s*\(\s*['\"](\w+)['\"]\s*\)", blob):
-                deps.append(f"model.{self.name}.{m.group(1)}")
+            deps = [
+                f"model.{self.name}.{m.group(1)}"
+                for text in _string_leaves(entry)
+                for m in _REF_CALL.finditer(text)
+            ]
             self.manifest.add(
                 Resource(
                     unique_id=uid,

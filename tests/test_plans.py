@@ -327,6 +327,148 @@ def test_changeset_move_and_latest_for(tmp_path: Path):
 
 
 # ---------------------------------------------------------------------------
+# ChangeSet property-file buffer: one read and one write per file per flush
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def yaml_io(monkeypatch):
+    """Counts ``read_yaml``/``write_yaml`` calls by path."""
+    from dbt_meshify_spark.plans import changes as C
+
+    calls: dict[str, list[Path]] = {"read": [], "write": []}
+    real_read, real_write = C.read_yaml, C.write_yaml
+
+    def read(path):
+        calls["read"].append(path)
+        return real_read(path)
+
+    def write(path, doc):
+        calls["write"].append(path)
+        real_write(path, doc)
+
+    monkeypatch.setattr(C, "read_yaml", read)
+    monkeypatch.setattr(C, "write_yaml", write)
+    return calls
+
+
+def _props(tmp_path: Path) -> Path:
+    p = tmp_path / "models" / "_models.yml"
+    p.parent.mkdir(parents=True)
+    p.write_text("version: 2\nmodels:\n  - name: a\n  - name: b\n  - name: c\n")
+    return p
+
+
+def _update(path: Path, name: str, data: dict) -> Change:
+    return Change(Operation.Update, EntityType.Model, name, path, data)
+
+
+def _quiet(*change_sets: ChangeSet) -> None:
+    ChangeSetProcessor(log=lambda _s: None).process(list(change_sets))
+
+
+def _models(path: Path) -> dict:
+    return {m["name"]: m for m in read_yaml(path)["models"]}
+
+
+def test_changeset_updates_to_one_file_read_and_write_it_once(tmp_path, yaml_io):
+    p = _props(tmp_path)
+    cs = ChangeSet([_update(p, n, {"access": "public"}) for n in ("a", "b", "c")])
+    cs.add(_update(p, "a", {"config": {"contract": {"enforced": True}}}))
+    _quiet(cs, ChangeSet([_update(p, "d", {"access": "private"})]))
+    assert yaml_io == {"read": [p], "write": [p]}
+    models = _models(p)
+    assert [m["access"] for m in models.values()] == ["public"] * 3 + ["private"]
+    assert models["a"]["config"] == {"contract": {"enforced": True}}
+
+
+def test_changeset_two_spellings_of_one_file_share_its_buffer(tmp_path, yaml_io):
+    p = _props(tmp_path)
+    other = p.parent / ".." / "models" / p.name
+    _quiet(ChangeSet([_update(p, "a", {"access": "public"}),
+                      _update(other, "b", {"access": "public"})]))
+    assert len(yaml_io["read"]) == len(yaml_io["write"]) == 1
+    assert [m.get("access") for m in _models(p).values()] == ["public", "public", None]
+
+
+def test_changeset_file_ops_see_buffered_edits(tmp_path, yaml_io):
+    p = _props(tmp_path)
+    copied, moved = tmp_path / "copy", tmp_path / "sub" / "_models.yml"
+    cs = ChangeSet([
+        _update(p, "a", {"access": "public"}),
+        _update(p, "c", {"access": "public"}),
+        Change(Operation.Copy, EntityType.Directory, "copy", copied, source=p.parent),
+        _update(p, "b", {"access": "public"}),
+        Change(Operation.Move, EntityType.Code, "_models.yml", moved, source=p),
+    ])
+    _quiet(cs)
+    assert _models(copied / "_models.yml")["c"]["access"] == "public"
+    assert "access" not in _models(copied / "_models.yml")["b"]
+    assert _models(moved)["b"]["access"] == "public" and not p.exists()
+    assert yaml_io["write"] == [p, p]
+
+
+def test_changeset_failure_keeps_earlier_buffered_edits(tmp_path, yaml_io):
+    from dbt_meshify_spark.plans.changes import ChangeSetProcessorException
+
+    p = _props(tmp_path)
+    # a resource change that fails while the edit of ``a`` is still buffered
+    bad = Change(Operation.Move, EntityType.Model, "b", p, source=tmp_path / "other.yml")
+    later = _update(p, "c", {"access": "public"})
+    cs = ChangeSet([_update(p, "a", {"access": "public"}), bad, later])
+    with pytest.raises(ChangeSetProcessorException) as exc:
+        _quiet(cs)
+    assert exc.value.change is bad
+    models = _models(p)
+    assert models["a"]["access"] == "public" and "access" not in models["c"]
+
+
+def test_changeset_dry_run_reads_and_writes_nothing(tmp_path, yaml_io):
+    p = _props(tmp_path)
+    before = p.read_text()
+    cs = ChangeSet([_update(p, "a", {"access": "public"}),
+                    Change(Operation.Remove, EntityType.Model, "b", p)])
+    ChangeSetProcessor(dry_run=True, log=lambda _s: None).process([cs])
+    assert yaml_io == {"read": [], "write": []} and p.read_text() == before
+
+
+def test_changeset_remove_to_empty_then_add_keeps_file(tmp_path, yaml_io):
+    p = _props(tmp_path)
+    cs = ChangeSet([Change(Operation.Remove, EntityType.Model, n, p) for n in "abc"])
+    cs.add(Change(Operation.Add, EntityType.Model, "z", p, {"name": "z", "access": "public"}))
+    _quiet(cs)
+    assert read_yaml(p) == {"version": 2, "models": [{"name": "z", "access": "public"}]}
+    assert yaml_io == {"read": [p], "write": [p]}
+    # removing the last entry again deletes the file at the flush
+    _quiet(ChangeSet([Change(Operation.Remove, EntityType.Model, "z", p)]))
+    assert not p.exists()
+
+
+def test_changeset_buffer_does_not_alias_change_data(tmp_path):
+    p = _props(tmp_path)
+    columns = [{"name": "id", "data_type": "bigint"}]
+    first = _update(p, "a", {"columns": columns, "config": {"contract": {"enforced": True}}})
+    second = _update(p, "a", {"columns": [{"name": "id", "description": "key"}],
+                              "config": {"contract": {"alias_types": False}}})
+    _quiet(ChangeSet([first, second]))
+    assert first.data == {"columns": [{"name": "id", "data_type": "bigint"}],
+                          "config": {"contract": {"enforced": True}}}
+    assert _models(p)["a"]["columns"] == [
+        {"name": "id", "data_type": "bigint", "description": "key"}]
+    assert "&id" not in p.read_text()
+
+
+def test_resource_editor_standalone_writes_through(tmp_path, yaml_io):
+    p = _props(tmp_path)
+    editor = ResourceFileEditor(EntityType.Model)
+    editor.update(p, "a", {"access": "public"})
+    assert _models(p)["a"]["access"] == "public"
+    editor.remove(p, "b")
+    assert set(_models(p)) == {"a", "c"}
+    assert yaml_io == {"read": [p, p], "write": [p, p]}
+
+
+# ---------------------------------------------------------------------------
 # R1–R4 rewrites (reference tests/unit/test_update_ref_functions.py)
 # ---------------------------------------------------------------------------
 

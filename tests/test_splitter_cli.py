@@ -110,6 +110,21 @@ def test_split_staging_end_to_end(proj_dir):
     assert {"name": "staging_proj"} in deps["projects"]
 
 
+def test_split_plan_reads_each_property_file_once(proj_dir, monkeypatch):
+    from dbt_meshify_spark.plans import splitter
+
+    reads = []
+    real = splitter.read_yaml
+    monkeypatch.setattr(splitter, "read_yaml", lambda p: reads.append(p) or real(p))
+    project = SparkProject.load(proj_dir)
+    sub = build_subproject(project, "staging_proj", ["+stg_orders", "+stg_lineitems"])
+    SubprojectCreator(sub).initialize()
+    moved = [proj_dir / r.patch_path
+             for r in map(project.manifest.get, sub.resources) if r.patch_path]
+    assert len(moved) == 4  # two models and two source tables, in two files
+    assert sorted(reads) == sorted(set(moved))
+
+
 def test_split_marts_rewrites_parent_refs(proj_dir):
     project = SparkProject.load(proj_dir)
     sub = build_subproject(project, "marts_proj", "customers_mart")
